@@ -361,13 +361,14 @@ def q_pagerank_k5(spark, sf_dir):
 
 
 def q_pagerank_csr_k5(spark, sf_dir):
-    """Same 5-superstep PageRank as pagerank_k5 but through the CSR
-    fast path (per-partition numpy kernels) — verified against the SAME
-    unrolled-CTE oracle, proving kernel ≡ join path to the driver."""
+    """Same 5-superstep PageRank as pagerank_k5 but through the
+    csr.pagerank_csr router pinned to its stream branch — verified
+    against the SAME unrolled-CTE oracle, proving the router forwards
+    to a stream path ≡ join path."""
     from .csr import pagerank_csr
 
     e = cust_supp_edges(spark, sf_dir)
-    res = pagerank_csr(spark, e, damping=D, tol=0.0, max_iters=5, mode="csr")
+    res = pagerank_csr(spark, e, damping=D, tol=0.0, max_iters=5, mode="stream")
     return res.state.select("id", F.round("rank", 6).alias("rank"))
 
 
@@ -464,13 +465,13 @@ def q_pagerank_warm_k5(spark, sf_dir):
 
 
 def q_cc_csr_k(spark, sf_dir):
-    """CC to convergence via the CSR kernel; exact (min is order-free),
-    same fixed point as the unrolled-k oracle for any k >= diameter —
-    uses k=6 like cc_k6."""
+    """CC via the csr.cc_csr router pinned to its stream branch; exact
+    (min is order-free), same fixed point as the unrolled-k oracle for
+    any k >= diameter — uses k=6 like cc_k6."""
     from .csr import cc_csr
 
     e = part_edges(spark, sf_dir)
-    res = cc_csr(spark, e, max_iters=6, mode="csr")
+    res = cc_csr(spark, e, max_iters=6, mode="stream")
     return res.state.select("id", "label")
 
 
@@ -613,10 +614,11 @@ def q_pagerank_w_k5(spark, sf_dir):
 
 
 def q_pagerank_w_csr_k5(spark, sf_dir):
-    """Weighted PageRank through the CSR disk-block kernel (type-2 blocks
-    carry a float64 ``w`` array; messages = rank/W * w) — verified
-    against the SAME weighted unrolled oracle as pagerank_w_k5, proving
-    the weighted kernel ≡ both join regimes."""
+    """Weighted PageRank through the csr.pagerank_csr router pinned to
+    its stream branch (type-2 blocks carry a float64 ``w`` array;
+    messages = rank/W * w) — verified against the SAME weighted unrolled
+    oracle as pagerank_w_k5, proving the router's weighted forwarding ≡
+    both join regimes."""
     from .csr import pagerank_csr
 
     e = cust_supp_edges(spark, sf_dir).withColumn(
@@ -624,19 +626,19 @@ def q_pagerank_w_csr_k5(spark, sf_dir):
         (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5))).cast("double"),
     )
     res = pagerank_csr(
-        spark, e, damping=D, tol=0.0, max_iters=5, mode="csr", weight_col="weight"
+        spark, e, damping=D, tol=0.0, max_iters=5, mode="stream", weight_col="weight"
     )
     return res.state.select("id", F.round("rank", 6).alias("rank"))
 
 
 def q_lpa_csr_k3(spark, sf_dir):
-    """Same 3-superstep LPA as lpa_k3 but through the CSR disk-block
-    kernel (partition-local (dst,label) count pre-aggregation) — verified
-    against the SAME unrolled oracle, proving kernel ≡ join path."""
+    """Same 3-superstep LPA as lpa_k3 but through the csr.lpa_csr router
+    pinned to its stream branch — verified against the SAME unrolled
+    oracle, proving the router forwards to a stream path ≡ join path."""
     from .csr import lpa_csr
 
     e = part_edges(spark, sf_dir)
-    res = lpa_csr(spark, e, max_iters=3, mode="csr")
+    res = lpa_csr(spark, e, max_iters=3, mode="stream")
     return res.state.select("id", "label")
 
 
@@ -669,7 +671,7 @@ def q_pagerank_w_stream_k5(spark, sf_dir):
     carry the float64 ``w`` array; scatter publishes rank/W * w partials)
     — verified against the SAME weighted unrolled oracle as
     pagerank_w_k5/pagerank_w_csr_k5, proving the weighted fused superstep
-    ≡ both join regimes and the classic CSR kernel."""
+    ≡ both join regimes."""
     from .stream import pagerank_stream
 
     e = cust_supp_edges(spark, sf_dir).withColumn(

@@ -39,8 +39,8 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   bucket's du slice, so the apply side routes through apos without
   knowing b's boff), ``llab-{b}``, ``lcnt-{b}``, and ``loff-{b}`` (p+1
   entry offsets per target bucket — the per-superstep analogue of the
-  build-time boff). In-block counting reuses the pack-key sort of
-  csr._lpa_csr_disk (measured 9.3x over lexsort there). Apply: concat all
+  build-time boff). In-block counting packs (di, label) into one int64
+  sort key (measured 9.3x over a two-key lexsort). Apply: concat all
   incoming (row, label, cnt) triples, sum counts per (row, label) via one
   pack-key argsort + reduceat, then winner per row = (max cnt, min label)
   via one lexsort — all integer ops, deterministic at any parallelism.
@@ -63,8 +63,8 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   self-loops are min-noops (_ParityBFS).
 
 Correctness contract: EXACT same fixed point and superstep count as the
-join and classic-CSR paths (cc: min-fold is order-free; lpa: integer
-counts and deterministic min-tie). Convergence = zero changed labels,
+join paths (cc: min-fold is order-free; lpa: integer counts and
+deterministic min-tie). Convergence = zero changed labels,
 identical to algos.cc/algos.lpa. Checkpoint/resume mirrors
 pagerank_stream: blob state through CheckpointManager; update streams are
 derived state, regenerated by one scatter-only job on resume.
@@ -215,8 +215,8 @@ class _ModeLabelLPA(_Int64LabelBase):
             lab_edge = labels[blk["pos"]]
             di = np.asarray(blk["dst_inverse"])
             # Per-(dst, label) counts: pack-key sort when the domain fits
-            # (di < 2^31 slots, labels in [0, 2^31)) — csr._lpa_csr_disk
-            # measured 9.3x over the two-key lexsort; identical output.
+            # (di < 2^31 slots, labels in [0, 2^31)) — measured 9.3x
+            # over the two-key lexsort; identical output.
             if (
                 len(blk["dst_unique"]) < 2**31
                 and lab_edge.min() >= 0
@@ -791,8 +791,6 @@ def _label_stream(
     directed, optionally weighted blocks for SSSP/BFS).
     """
     g = graph or algo.prep_graph(spark, edges, num_partitions, token)
-    if g.layout != "disk":
-        raise ValueError(f"{algo.name} requires the disk block layout")
     n = g.num_vertices
     p = g.p
     token_, block_dir = g.cache_token, g.block_dir
@@ -959,9 +957,9 @@ def cc_stream(
     state_partitions: int | None = None,
 ) -> RunResult:
     """Hash-min connected components via the fused stream superstep —
-    exact same fixed point and superstep count as algos.cc and csr.cc_csr
-    (min-fold is order-free). ``graph`` must be a disk-layout CsrGraph
-    built with undirected=True (bench warmup → timed run reuse)."""
+    exact same fixed point and superstep count as algos.cc (min-fold is
+    order-free). ``graph`` must be a CsrGraph built with undirected=True
+    (bench warmup → timed run reuse)."""
     return _label_stream(
         spark, edges, _HashMinCC(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions,
@@ -981,8 +979,8 @@ def lpa_stream(
 ) -> RunResult:
     """Synchronous LPA (most-frequent neighbor label, min-label ties) via
     the fused stream superstep — exact same fixed point and superstep
-    count as algos.lpa and csr.lpa_csr (integer counts, deterministic
-    tie-break, fixed fold order)."""
+    count as algos.lpa (integer counts, deterministic tie-break, fixed
+    fold order)."""
     return _label_stream(
         spark, edges, _ModeLabelLPA(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions,
@@ -1033,7 +1031,7 @@ def hyperanf_stream(
     neighborhood-function curves, fixed point, and superstep count as
     algos.hyperanf.hyper_anf (register max is order-free and idempotent;
     the HLL estimate is the same elementwise float64 expression on
-    identical registers). ``graph`` must be a disk-layout CsrGraph built
+    identical registers). ``graph`` must be a CsrGraph built
     with undirected=True (same flavor CC/LPA use — the warm-block registry
     shares one build across all three)."""
     return _label_stream(
@@ -1240,9 +1238,6 @@ def scc_stream(
         spark, e_rev, num_partitions=g_f.p,
         token=None if token is None else f"{token}|rev",
     )
-    for g in (g_f, g_b):
-        if g.layout != "disk":
-            raise ValueError("scc_stream requires the disk block layout")
     assert g_b.p == g_f.p and g_b.num_vertices == g_f.num_vertices
     n, p = g_f.num_vertices, g_f.p
     tok_f, bdir_f = g_f.cache_token, g_f.block_dir

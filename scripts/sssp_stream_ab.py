@@ -2,7 +2,7 @@
 vs the fused min-plus stream path (stream_algos.sssp_stream), on the
 persisted RMAT bench graph.
 
-Same protocol as scripts/label_stream_ab.py: fixed supersteps, a pinned
+Protocol: fixed supersteps, a pinned
 directed block layout shared by the warm and timed stream legs (64M-edge
 graphs exceed the warm-registry cap, so the token is pinned explicitly),
 a 2-superstep warm leg per path excluded from the timed window, and an
@@ -81,7 +81,7 @@ def main() -> None:
     if args.algo in ("bfs", "both"):
         # One pinned block layout shared by the warm and timed legs,
         # built OUTSIDE every timed window (static preprocessed input,
-        # same protocol as label_stream_ab / bench.py --one).
+        # same protocol as bench.py --one).
         g = _MinPlusSSSP(root).prep_graph(
             spark, edges, args.shuffle, f"ab-bfs-{path}-{args.shuffle}")
         timed("bfs_stream_warm", lambda: sssp_stream(

@@ -1,9 +1,11 @@
-"""CSR fast path ≡ join path (SURVEY §3.2 property) + oracle checks.
+"""csr.py: the join/stream routers, the block builder, and its
+content fingerprint.
 
-The CSR kernel must compute the same fixed point as the DataFrame join
-path on every fixture graph: exact for CC (min is summation-order-free),
-allclose for PageRank (float sums reorder), and the same superstep count
-(both paths see the same convergence deltas up to ulp noise).
+The routers' stream branch (``mode="stream"``) must compute the same
+fixed point as the DataFrame join path on every fixture graph: exact for
+CC (min is summation-order-free), allclose for PageRank (float sums
+reorder), and the same superstep count — which also checks that
+``pagerank_csr``/``cc_csr``/``lpa_csr`` forward their arguments.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ def _ranks(res):
 def test_pagerank_csr_equals_join_path(spark, name):
     edges = spark.createDataFrame(GRAPHS[name]())
     r_join = pagerank(spark, edges, tol=1e-6, max_iters=60, mode="shuffle")
-    r_csr = pagerank_csr(spark, edges, tol=1e-6, max_iters=60, mode="csr")
+    r_csr = pagerank_csr(spark, edges, tol=1e-6, max_iters=60, mode="stream")
     a, b = _ranks(r_join), _ranks(r_csr)
     assert set(a) == set(b)
     ks = sorted(a)
@@ -45,7 +47,7 @@ def test_pagerank_csr_equals_join_path(spark, name):
 def test_pagerank_csr_matches_oracle(spark, name):
     pdf = GRAPHS[name]()
     edges = spark.createDataFrame(pdf)
-    res = pagerank_csr(spark, edges, tol=1e-9, max_iters=500, mode="csr")
+    res = pagerank_csr(spark, edges, tol=1e-9, max_iters=500, mode="stream")
     assert res.converged
     got = _ranks(res)
     want = pagerank_oracle(pdf)
@@ -61,25 +63,15 @@ def test_cc_csr_equals_join_path(spark, name):
         connected_components(spark, edges, max_iters=100, mode="join")
         .state.select("id", "label").collect()
     )
-    b = dict(cc_csr(spark, edges, max_iters=100, mode="csr").state.select("id", "label").collect())
+    b = dict(
+        cc_csr(spark, edges, max_iters=100, mode="stream")
+        .state.select("id", "label").collect()
+    )
     assert a == b
 
 
-@pytest.mark.parametrize("other", ["rows", "packed"])
-def test_csr_layouts_equal(spark, other):
-    """Disk blocks, cogrouped rows, and packed blobs are pure layout
-    choices — equal results (per-block fold order may differ between
-    disk and cogroup partitionings, so allclose at float tolerance)."""
-    edges = spark.createDataFrame(GRAPHS["powerlaw"]())
-    a = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=4, layout="disk"))
-    b = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=4, layout=other))
-    ks = sorted(a)
-    assert a.keys() == b.keys()
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
-
-
 def test_lpa_csr_equals_join_path(spark):
-    """lpa_csr (disk-block kernel) reaches the identical labeling as the
+    """lpa_csr's stream branch reaches the identical labeling as the
     DataFrame join path — exact (counts + deterministic min-label ties)."""
     from chaos_spark.algos import label_propagation
     from chaos_spark.csr import lpa_csr
@@ -91,16 +83,16 @@ def test_lpa_csr_equals_join_path(spark):
             .state.select("id", "label").collect()
         )
         b = dict(
-            lpa_csr(spark, edges, max_iters=7, mode="csr").state.select("id", "label").collect()
+            lpa_csr(spark, edges, max_iters=7, mode="stream")
+            .state.select("id", "label").collect()
         )
         assert a == b
 
 
 def test_pagerank_weighted_csr_equals_join_path(spark):
-    """Type-2 (weighted) disk blocks: the CSR kernel's rank/W * w messages
-    reach the same fixed point as the join path's weighted regime
-    (VERDICT r3 item 6 done-criterion)."""
-    import pandas as pd
+    """Type-2 (weighted) blocks: the stream kernel's rank/W * w messages
+    reach the same fixed point as the join path's weighted regime on a
+    powerlaw graph at tol=0 (VERDICT r3 item 6 done-criterion)."""
     from pyspark.sql import functions as F
 
     pdf = g4_powerlaw(scale=9, num_edges=3000)
@@ -110,7 +102,7 @@ def test_pagerank_weighted_csr_equals_join_path(spark):
     )
     a = _ranks(pagerank(spark, edges, tol=0.0, max_iters=6, weight_col="weight",
                         mode="shuffle"))
-    b = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=6, mode="csr",
+    b = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=6, mode="stream",
                             weight_col="weight"))
     assert set(a) == set(b)
     ks = sorted(a)
@@ -121,8 +113,10 @@ def test_csr_partition_invariance(spark):
     """Result must not depend on the partition count (the autotuned P is a
     physical choice, never semantic)."""
     edges = spark.createDataFrame(GRAPHS["powerlaw"]())
-    r4 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=4, mode="csr"))
-    r11 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=11, mode="csr"))
+    r4 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=4,
+                             mode="stream"))
+    r11 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=11,
+                              mode="stream"))
     ks = sorted(r4)
     assert np.allclose([r4[k] for k in ks], [r11[k] for k in ks], rtol=0, atol=1e-12)
 
@@ -168,71 +162,39 @@ def test_disk_blocks_rebuilt_on_changed_edges(spark, tmp_path, monkeypatch):
     with open(marker) as f:
         assert f.read() == marker_text(g_new)
     # and the rebuilt blocks drive a correct run on the NEW graph
-    res = csr_mod.cc_csr(spark, e2, num_partitions=4, token="pinned")
+    res = csr_mod.cc_csr(spark, e2, num_partitions=4, token="pinned", mode="stream")
     labels = {r["id"]: r["label"] for r in res.state.collect()}
     from tests.oracles import cc_oracle
 
     assert labels == cc_oracle(g3_cliques())
 
 
-def test_check_aligned_guard():
-    """The v4 kernels' misalignment guard: the state partition's sorted id
-    vector must EQUAL the block's build-time ``ids`` — any repartitioning
-    drift (AQE re-plan, parquet round trip, partitioner change) must raise,
-    never gather silently from the wrong rows. Pure-numpy unit test of the
-    guard itself; the Spark-level layout precondition is exercised by every
-    disk-path test above via align_state."""
-    from chaos_spark.csr import _check_aligned
-
-    ids = np.array([2, 5, 9, 11], dtype=np.int64)
-    blk = {"ids": ids}
-    _check_aligned(blk, ids.copy())  # equal vector: no raise
-
-    for bad in (
-        np.array([2, 5, 9], dtype=np.int64),        # missing id
-        np.array([2, 5, 9, 11, 13], dtype=np.int64),  # extra id
-        np.array([2, 5, 10, 11], dtype=np.int64),   # same size, drifted id
-        np.array([], dtype=np.int64),               # empty state partition
-    ):
-        with pytest.raises(RuntimeError, match="misaligned"):
-            _check_aligned(blk, bad)
-
-
-def test_auto_route_three_way():
+def test_auto_route_two_way():
     """mode="auto" routes by the measured crossover — join below
-    CSR_AUTO_MIN_EDGES, fused stream at/above it — while explicit knobs
-    pin the named path. Pure routing unit test (num_edges supplied so no
-    count job runs; edges is never touched)."""
+    ``min_edges``, fused stream at/above it — and mode="stream" pins the
+    stream path. The retired classic kernel's mode "csr" is an unknown
+    mode, and every router refuses it before touching Spark. Pure routing
+    unit test (num_edges supplied so no count job runs; edges is never
+    touched)."""
     from chaos_spark import csr as csr_mod
 
-    lo, hi = csr_mod.CSR_AUTO_MIN_EDGES - 1, csr_mod.CSR_AUTO_MIN_EDGES
     route = csr_mod._auto_route
-    assert route(None, "auto", lo, None, None) == ("join", lo)
-    assert route(None, "auto", hi, None, None) == ("stream", hi)
-    # per-algorithm crossover: the many-superstep algorithms (pagerank,
-    # lpa) pass min_edges=STREAM_AUTO_MIN_EDGES (100k, measured in
-    # scripts/sf01_path_ab.py); CC keeps the conservative default.
-    s_lo = csr_mod.STREAM_AUTO_MIN_EDGES - 1
-    s_hi = csr_mod.STREAM_AUTO_MIN_EDGES
-    assert csr_mod.STREAM_AUTO_MIN_EDGES < csr_mod.CSR_AUTO_MIN_EDGES
-    assert route(None, "auto", s_lo, None, None,
-                 min_edges=s_hi) == ("join", s_lo)
-    assert route(None, "auto", s_hi, None, None,
-                 min_edges=s_hi) == ("stream", s_hi)
-    # ... and a size between the two crossovers routes join for CC but
-    # stream for pagerank/lpa
-    mid = (s_hi + csr_mod.CSR_AUTO_MIN_EDGES) // 2
-    assert route(None, "auto", mid, None, None) == ("join", mid)
-    assert route(None, "auto", mid, None, None,
-                 min_edges=s_hi) == ("stream", mid)
-    assert route(None, "csr", lo, None, None) == ("csr", None)
-    assert route(None, "stream", lo, "tok", None) == ("stream", lo)
-    # explicit classic-kernel knobs pin the kernel even in auto mode
-    assert route(None, "auto", hi, "tok", None) == ("csr", None)
-    assert route(None, "auto", hi, None, "disk") == ("csr", None)
-    assert route(None, "auto", hi, None, None, packed=True) == ("csr", None)
-    with pytest.raises(ValueError, match="unknown mode"):
-        route(None, "bogus", hi, None, None)
+    lo, hi = csr_mod.CSR_AUTO_MIN_EDGES - 1, csr_mod.CSR_AUTO_MIN_EDGES
+    assert route(None, "auto", lo) == ("join", lo)
+    assert route(None, "auto", hi) == ("stream", hi)
+    # per-algorithm crossover: pagerank/lpa pass STREAM_AUTO_MIN_EDGES
+    # (100k, measured in scripts/sf01_path_ab.py), CC its own 200k.
+    for m in (csr_mod.STREAM_AUTO_MIN_EDGES, csr_mod.CC_STREAM_MIN_EDGES):
+        assert route(None, "auto", m - 1, min_edges=m) == ("join", m - 1)
+        assert route(None, "auto", m, min_edges=m) == ("stream", m)
+    assert route(None, "stream", lo) == ("stream", lo)
+    assert route(None, "stream", None) == ("stream", None)
+    for mode in ("csr", "bogus"):
+        with pytest.raises(ValueError, match="unknown mode"):
+            route(None, mode, hi)
+        for fn in (csr_mod.pagerank_csr, csr_mod.cc_csr, csr_mod.lpa_csr):
+            with pytest.raises(ValueError, match="unknown mode"):
+                fn(None, None, mode=mode, num_edges=hi)
 
 
 def test_auto_route_serves_stream_above_crossover(spark, monkeypatch):
@@ -295,10 +257,10 @@ def test_warm_block_registry_reuse_and_reroute(spark, monkeypatch):
     built_at = os.path.getmtime(marker)
 
     # Below the cold crossover the plain router says join...
-    assert csr_mod._auto_route(edges, "auto", 12, None, None) == ("join", 12)
+    assert csr_mod._auto_route(edges, "auto", 12) == ("join", 12)
     # ...but with warm blocks the probe flips it to stream.
     assert csr_mod._auto_route(
-        edges, "auto", 12, None, None, warm_key=k_und
+        edges, "auto", 12, warm_key=k_und
     ) == ("stream", 12)
 
     cc_a = dict(cc_csr(spark, edges).state.select("id", "label").collect())
@@ -319,5 +281,70 @@ def test_warm_block_registry_reuse_and_reroute(spark, monkeypatch):
     assert csr_mod._warm_blocks_ready(k_und) is None
     assert k_und not in csr_mod._WARM_BLOCKS
     assert csr_mod._auto_route(
-        edges, "auto", 12, None, None, warm_key=k_und
+        edges, "auto", 12, warm_key=k_und
     ) == ("join", 12)
+
+
+def test_edge_fingerprint_matches_spark_xxhash64(spark):
+    """The v6 build folds its content fingerprint in numpy
+    (``_edge_fp_np``); marker validation on warm reuse folds Spark's own
+    ``bit_xor(xxhash64(src, dst[, w]))``. The two must agree bit for bit,
+    row for row, or pinned blocks would rebuild forever (or, worse, a
+    collision in one side alone would go unnoticed)."""
+    from pyspark.sql import functions as F
+
+    from chaos_spark.csr import _edge_fp_np
+
+    big = 2**32 + 7
+    rows = [
+        (0, 1, 1.0),
+        (-1, 2, 2.5),
+        (3, -(2**40), 0.5),
+        (big, big + 1, 3.0),
+        (-big, 5, 1e-300),
+        (2**63 - 1, -(2**63), 7.0),
+        (6, 7, 0.0),
+        (6, 8, -0.0),
+        (9, 9, -2.0),
+        (0, 1, 1.0),  # duplicate pair: hashed again, xor cancels it
+        (0, 1, 1.0),
+    ]
+    df = spark.createDataFrame(rows, "src long, dst long, w double")
+    src = np.array([r[0] for r in rows], dtype=np.int64)
+    dst = np.array([r[1] for r in rows], dtype=np.int64)
+    w = np.array([r[2] for r in rows], dtype=np.float64)
+    for cols, wv in ((["src", "dst"], None), (["src", "dst", "w"], w)):
+        got = [
+            r["h"] for r in df.select(F.xxhash64(*cols).alias("h")).collect()
+        ]
+        want = [
+            _edge_fp_np(src[i:i + 1], dst[i:i + 1],
+                        None if wv is None else wv[i:i + 1])
+            for i in range(len(rows))
+        ]
+        assert got == want
+        fold = df.agg(F.bit_xor(F.xxhash64(*cols)).alias("fp")).first()["fp"]
+        assert fold == _edge_fp_np(src, dst, wv)
+    assert _edge_fp_np(src[:0], dst[:0], None) == 0
+
+
+def test_int_typed_edges_adopt_pinned_blocks(spark, tmp_path, monkeypatch):
+    """Edges with int (not bigint) id columns: the build's numpy
+    fingerprint and the marker check's Spark xxhash64 must see the same
+    int64 ids, so a second CsrGraph on the same pinned token adopts the
+    blocks instead of rebuilding them."""
+    import chaos_spark.csr as csr_mod
+
+    monkeypatch.setattr(csr_mod, "_DISK_BLOCK_BASE", str(tmp_path))
+    edges = spark.createDataFrame(
+        [(int(s), int(d)) for s, d in g3_cliques().itertuples(index=False)],
+        "src int, dst int",
+    )
+    g1 = csr_mod.CsrGraph(spark, edges, num_partitions=4, token="pinned-int")
+
+    def no_rebuild(self, e):
+        raise AssertionError("blocks rebuilt instead of adopted")
+
+    monkeypatch.setattr(csr_mod.CsrGraph, "_build_v6", no_rebuild)
+    g2 = csr_mod.CsrGraph(spark, edges, num_partitions=4, token="pinned-int")
+    assert (g2.num_edges, g2.edge_fp) == (g1.num_edges, g1.edge_fp)

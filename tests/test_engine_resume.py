@@ -56,29 +56,28 @@ def test_resume_refuses_config_mismatch(spark, tmp_path):
 
 
 def test_pagerank_csr_resume_identical(spark, tmp_path):
-    """North-rule item: the CSR disk-block path (the default/north-star
-    mechanism) must itself be checkpoint-resumable — interrupt after 3
-    supersteps, resume to a state identical to an uninterrupted run.
-    The realign hook restores the hash(id, p) partitioning the block
-    routing depends on after the parquet round trip."""
+    """North-rule item: the scale path, reached through the pagerank_csr
+    router, must be checkpoint-resumable — interrupt after 3 supersteps,
+    resume to a state identical to an uninterrupted run. The router must
+    forward ``checkpointer``/``checkpoint_every`` to the stream path."""
     from chaos_spark.csr import pagerank_csr
 
     pdf = g4_powerlaw(scale=9, num_edges=2000)
     edges = spark.createDataFrame(pdf)
     cfg = {"algo": "pagerank_csr", "tol": 1e-9, "damping": 0.85}
 
-    full = pagerank_csr(spark, edges, tol=1e-9, max_iters=500, mode="csr")
+    full = pagerank_csr(spark, edges, tol=1e-9, max_iters=500, mode="stream")
 
     cp = CheckpointManager(str(tmp_path), "pagerank_csr", cfg)
     partial = pagerank_csr(
         spark, edges, tol=1e-9, max_iters=3, checkpointer=cp, checkpoint_every=1,
-        mode="csr",
+        mode="stream",
     )
     assert not partial.converged
     assert cp.latest()["superstep"] == 3
     resumed = pagerank_csr(
         spark, edges, tol=1e-9, max_iters=500, checkpointer=cp, checkpoint_every=5,
-        mode="csr",
+        mode="stream",
     )
     assert resumed.converged
     # resumed run started from the checkpoint, not from scratch
@@ -95,12 +94,12 @@ def test_cc_csr_resume_identical(spark, tmp_path):
 
     pdf = g4_powerlaw(scale=8, num_edges=1200)
     edges = spark.createDataFrame(pdf)
-    full = cc_csr(spark, edges, max_iters=100, mode="csr")
+    full = cc_csr(spark, edges, max_iters=100, mode="stream")
 
     cp = CheckpointManager(str(tmp_path), "cc_csr", {"algo": "cc_csr"})
-    partial = cc_csr(spark, edges, max_iters=2, checkpointer=cp, checkpoint_every=1, mode="csr")
+    partial = cc_csr(spark, edges, max_iters=2, checkpointer=cp, checkpoint_every=1, mode="stream")
     assert not partial.converged
-    resumed = cc_csr(spark, edges, max_iters=100, checkpointer=cp, checkpoint_every=5, mode="csr")
+    resumed = cc_csr(spark, edges, max_iters=100, checkpointer=cp, checkpoint_every=5, mode="stream")
     assert resumed.converged
     assert resumed.history[0]["superstep"] == 3
 
@@ -114,11 +113,11 @@ def test_lpa_csr_resume_identical(spark, tmp_path):
 
     pdf = g4_powerlaw(scale=8, num_edges=1200)
     edges = spark.createDataFrame(pdf)
-    full = lpa_csr(spark, edges, max_iters=6, mode="csr")
+    full = lpa_csr(spark, edges, max_iters=6, mode="stream")
 
     cp = CheckpointManager(str(tmp_path), "lpa_csr", {"algo": "lpa_csr"})
-    lpa_csr(spark, edges, max_iters=2, checkpointer=cp, checkpoint_every=1, mode="csr")
-    resumed = lpa_csr(spark, edges, max_iters=6, checkpointer=cp, checkpoint_every=5, mode="csr")
+    lpa_csr(spark, edges, max_iters=2, checkpointer=cp, checkpoint_every=1, mode="stream")
+    resumed = lpa_csr(spark, edges, max_iters=6, checkpointer=cp, checkpoint_every=5, mode="stream")
     assert resumed.history[0]["superstep"] == 3
 
     a = {r["id"]: r["label"] for r in full.state.collect()}

@@ -1,11 +1,11 @@
 """Fused streaming-partition superstep ≡ join path (SURVEY §3.2 property).
 
 pagerank_stream must compute the same fixed point, in the same number of
-supersteps, as the DataFrame join path and the classic CSR path — allclose
-(float association differs across paths), exact id set, rank mass 1. Plus
-the stream-specific invariants: resume from a mid-run checkpoint equals the
-uninterrupted run (update streams are regenerated, not checkpointed), and
-weighted graphs ride the same blocks.
+supersteps, as the DataFrame join path — allclose (float association
+differs across paths), exact id set, rank mass 1. Plus the stream-specific
+invariants: resume from a mid-run checkpoint equals the uninterrupted run
+(update streams are regenerated, not checkpointed), and weighted graphs
+ride the same blocks and reject the same bad weights.
 """
 
 from __future__ import annotations
@@ -76,6 +76,28 @@ def test_pagerank_stream_weighted_equals_join(spark):
     assert set(a) == set(b)
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize("bad", [None, 0.0], ids=["null", "zero"])
+@pytest.mark.parametrize("route", ["algos_auto", "csr_stream", "direct"])
+def test_pagerank_stream_rejects_bad_weights(spark, monkeypatch, route, bad):
+    """A NULL or zero weight makes a vertex neither sender nor dangling
+    (silent rank-mass leak), so every route into the stream path raises
+    before building blocks — as the join regimes always have."""
+    from chaos_spark import csr as csr_mod
+
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, bad), (2, 0, 2.0)], "src long, dst long, w double"
+    )
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
+    run = {
+        "algos_auto": lambda: pagerank(spark, edges, weight_col="w"),
+        "csr_stream": lambda: csr_mod.pagerank_csr(
+            spark, edges, weight_col="w", mode="stream"),
+        "direct": lambda: pagerank_stream(spark, edges, weight_col="w"),
+    }[route]
+    with pytest.raises(ValueError, match="strictly positive"):
+        run()
 
 
 def test_pagerank_stream_chained_equals_unchained(spark):
@@ -217,16 +239,18 @@ def test_pagerank_stream_warm_start_continues_exactly(spark):
 
 
 def test_pagerank_csr_warm_start_continues_exactly(spark):
+    """The same continuation through the pagerank_csr router: it must
+    forward ``init_ranks`` to the stream path."""
     from chaos_spark.csr import pagerank_csr
 
     pdf = g4_powerlaw(scale=9, num_edges=3000)
     edges = spark.createDataFrame(pdf)
-    cold3 = pagerank_csr(spark, edges, tol=0.0, max_iters=3, mode="csr")
+    cold3 = pagerank_csr(spark, edges, tol=0.0, max_iters=3, mode="stream")
     warm = pagerank_csr(
-        spark, edges, tol=0.0, max_iters=2, mode="csr",
+        spark, edges, tol=0.0, max_iters=2, mode="stream",
         init_ranks=cold3.state.select("id", "rank"),
     )
-    cold5 = pagerank_csr(spark, edges, tol=0.0, max_iters=5, mode="csr")
+    cold5 = pagerank_csr(spark, edges, tol=0.0, max_iters=5, mode="stream")
     a, b = _ranks(warm), _ranks(cold5)
     assert set(a) == set(b)
     ks = sorted(a)

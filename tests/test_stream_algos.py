@@ -1,4 +1,4 @@
-"""Fused stream CC/LPA ≡ join and classic-CSR paths (SURVEY §3.2 property).
+"""Fused stream CC/LPA ≡ join paths (SURVEY §3.2 property).
 
 cc_stream / lpa_stream must reach the EXACT same fixed point, in the same
 number of supersteps, as the DataFrame join paths (min-fold and integer
