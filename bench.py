@@ -360,14 +360,13 @@ def _pagerank_throughput(
         # steady-state median (r3 diag: 14.0 s vs 3.5 s steady).
         no_ckpt = supersteps + warmup_steps + 1
         sp = int(os.environ.get("CHAOS_STREAM_STATE_PARTS", "0")) or None
-        chain = int(os.environ.get("CHAOS_STREAM_CHAIN", "1"))
         pagerank_stream(spark, edges, tol=0.0, max_iters=warmup_steps,
                         checkpoint_every=no_ckpt, graph=g,
-                        state_partitions=sp, chain=chain)
+                        state_partitions=sp)
         t0 = time.time()
         res = pagerank_stream(spark, edges, tol=0.0, max_iters=supersteps,
                               checkpoint_every=no_ckpt, graph=g,
-                              state_partitions=sp, chain=chain)
+                              state_partitions=sp)
         wall = time.time() - t0
         assert res.supersteps == supersteps
         return {

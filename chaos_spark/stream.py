@@ -1,5 +1,5 @@
-"""Streaming-partition superstep — Chaos's slipstore loop as ONE fused
-Spark stage per iteration (chainable to K iterations per Spark JOB).
+"""Streaming-partition superstep — Chaos's slipstore loop on resident
+compute tasks: one gang-scheduled Spark stage per run segment.
 
 A superstep that runs the exchange through Spark row machinery — the
 kernel emitting ~|distinct dst per block| x p update ROWS (20.3M on the
@@ -13,11 +13,11 @@ state cost ~85% of the full kernel phase).
 This module removes the rows. It is the 1:1 Spark image of how Chaos
 actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
 
-- Vertex state is a BLOB per streaming partition: one Spark row
-  ``(part int, blob binary)`` holding the partition's float64 rank vector,
-  aligned to the build-time sorted id vector (csr.py apply-{q}/ids.npy).
-  Per superstep, Spark moves p rows x |V|/p x 8 bytes — raw vector bytes,
-  no per-row Arrow columns, no shuffle of messages.
+- Vertex state is a BLOB per streaming partition: the partition's float64
+  rank vector, aligned to the build-time sorted id vector (csr.py
+  apply-{q}/ids.npy). Between segments and in checkpoints it is one Spark
+  row ``(part int, blob binary)`` — raw vector bytes, no per-row Arrow
+  columns, no shuffle of messages.
 - Update streams are PER-TARGET-PARTITION SLICES of each block's partial
   array, written to shared storage (the same block_dir the static CSR
   blocks live in — Chaos's slipstore; tmpfs/page-cache locally, shared
@@ -28,52 +28,63 @@ actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
   never retransmitted (they live in the build-time apply plan). The
   global dangling mass is itself a message: each partition publishes its
   dangling sum next to its partials (stats-{q}.npy) and every apply task
-  folds the same fixed-order sum — no driver round trip carries it.
-- The superstep is ONE narrow mapInPandas stage over the blob state that
-  FUSES apply and scatter, plus an eager localCheckpoint barrier:
+  folds the same fixed-order sum.
+- The loop runs on RESIDENT tasks (:func:`run_resident`). A run segment
+  is ONE barrier-mode stage of S = min(state_partitions or p, free task
+  slots) gang-scheduled tasks; task t owns the partitions q ≡ t (mod S)
+  and keeps their blobs in memory for the whole segment. Per superstep
+  each task, for each owned partition:
     1. apply:  contrib = bincount(apos, weights=concat of incoming
        slices) — build-time positions, zero per-superstep searches;
        rank' = (1-d)/n + d * (contrib + dangling/n)
     2. scatter: m = rank' * iod; partial = add.reduceat(m[pos], starts);
-       atomically publish the block's new update stream for step t+1.
-    3. emit (part, blob'); the convergence statistic max|Δrank| is
-       published with the update stream (stats-{q}) and read by the
-       driver from files after the barrier — no CollectMetrics node,
-       no listener wait.
-  The eager checkpoint action is the superstep BARRIER: step t+1's apply
-  can only run after every step-t scatter has published (exactly
-  X-Stream's phase barrier between scatter and gather).
-- ``chain=K`` stacks K fused layers inside ONE Spark job, with a
-  round-robin repartition of the p blob rows (a ~|V| x 8-byte shuffle)
-  between layers: the shuffle dependency IS the superstep barrier, so the
-  per-JOB driver costs (plan analysis, job scheduling, py4j) are paid
-  once per K supersteps. Convergence is still recorded per layer (each
-  layer's stats files); with tol > 0 the run stops at the
-  first job whose layers converged — the state may then be up to K-1
-  supersteps MORE converged than the join path would return, so exact
-  superstep-count parity holds for chain=1 (the default) and fixed-iters
-  runs (tol=0), which is what the scaling bench uses.
+       atomically publish the block's update stream, stats-{q} LAST.
+  then waits until every stats-{q} of the recorded partition set exists:
+  the update stream itself is the superstep barrier (X-Stream's phase
+  barrier between scatter and gather; Chaos's slipstore). Every task
+  then folds the same fixed-order global delta (or changed count) from
+  those files, so all tasks stop at the same superstep with the same
+  arithmetic — no driver round trip, no Spark job per superstep. Spark's
+  own ``BarrierTaskContext`` barrier is not used: its wait polls once a
+  second, ~1 s per round against ~1 ms for the file barrier.
+- Without a checkpointer the whole run is one segment. With one, a
+  segment is ``checkpoint_every`` supersteps and the driver saves the
+  blob state between segments. Task 0 records each superstep's
+  barrier-to-barrier seconds, barrier wait and global statistic in the
+  segment's ``hist.npy``; the driver reads it into ``RunResult.history``.
+
+Deployment premise: besides the shared block dir the store already
+assumes, barrier mode needs static allocation (no dynamic allocation)
+and S <= free task slots (``defaultParallelism // spark.task.cpus``);
+``state_partitions`` is clamped to that.
 
 Correctness contract: identical supersteps and results vs the join
 path — the apply formula, dangling redistribution, and convergence test
 are the same expressions; per-dst partial sums are one reduceat over
 the block's fixed edge order; the cross-block apply sum and the
 dangling-mass fold run in fixed block order, so results are
-deterministic run-to-run at any parallelism.
+deterministic run-to-run at any parallelism and any S.
 Allclose vs the join path (float association differs there),
 property-tested in tests/test_stream.py.
 
-Retry/speculation safety: update-stream files are published by atomic
-rename and their content is a pure function of (blob state, static block)
-— a retried or speculative task republishes identical bytes. Stream dirs
-are namespaced by a per-run id so concurrent runs sharing a pinned block
-layout never collide; consumed dirs are deleted as each job completes.
+Retry safety: the segment's (part, blob) output is shuffled into the
+next state, so the barrier stage is a ShuffleMapStage, which Spark
+retries as a whole. A retried attempt reports ``attemptNumber() == 0``
+again, so each task drops a start marker and takes its marker count as
+the attempt index: every attempt publishes into its own directory, and
+a killed task of an earlier attempt can neither delete the live
+attempt's files nor satisfy its barrier. Update-stream content is a pure
+function of (blob state, static block). A barrier that waits longer than
+``spark.network.timeout`` raises, naming the superstep and the missing
+partitions. Stream dirs are namespaced by a per-run id so concurrent
+runs sharing a pinned block layout never collide; task 0 deletes each
+consumed superstep dir, and the driver deletes the run's dir on exit.
 
 Checkpoint/resume: the blob state is written as-is (part, blob) through
 the standard CheckpointManager (parquet + per-partition manifest +
-config-sha refusal). On resume the update stream is regenerated from the
-loaded blobs by one scatter-only job — update streams (and the dangling
-mass riding them) are derived state and are never checkpointed.
+config-sha refusal). Every segment regenerates the update stream of its
+starting blobs — update streams (and the dangling mass riding them) are
+derived state and are never checkpointed.
 """
 
 from __future__ import annotations
@@ -88,15 +99,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .checkpoint import CheckpointManager
-from .engine import (
-    RunResult,
-    _host_cpu_jiffies,
-    materialize,
-    maybe_explain,
-    release_state,
-    run_supersteps,
-    superstep_conf,
-)
+from .engine import RunResult, release_state, superstep_conf
 from .csr import CsrGraph, _load_apply_plan, _load_disk_block
 from .graph import ID
 
@@ -104,26 +107,8 @@ PART, BLOB = "part", "blob"
 _STATE_SCHEMA = f"{PART} int, {BLOB} binary"
 
 # Worker-level memo: dangling mass per update dir (each worker folds the
-# p tiny stats files once per superstep, not once per task/row).
+# p tiny stats files once per superstep, not once per owned partition).
 _DM_CACHE: dict[str, float] = {}
-
-
-def _prof_write(prof_dir, superstep, q, t00, t0, t1, t2):
-    """CHAOS_STREAM_PROF diagnostics: per-task phase seconds (drain = Arrow
-    decode wait before the first row, apply, scatter) + absolute task
-    start/end, so the in-task time can be separated from scheduling and
-    barrier gaps. Dev-only, off unless the env var is set."""
-    import json
-
-    os.makedirs(prof_dir, exist_ok=True)
-    with open(os.path.join(
-        prof_dir, f"s{superstep}-q{q}-{os.getpid()}.json"
-    ), "w") as f:
-        json.dump({
-            "superstep": superstep, "q": q,
-            "drain": t0 - t00, "apply": t1 - t0, "scatter": t2 - t1,
-            "t_start": t00, "t_end": t2, "pid": os.getpid(),
-        }, f)
 
 
 def _upd_dir(block_dir: str, run_id: str, superstep: int) -> str:
@@ -133,7 +118,7 @@ def _upd_dir(block_dir: str, run_id: str, superstep: int) -> str:
 def _apply_parts(block_dir: str) -> tuple:
     """The non-empty state partitions — exactly the partitions the v6
     build wrote an apply plan for. A driver-side listdir (p entries, zero
-    Spark jobs); replaces the init-scatter job's collect."""
+    Spark jobs)."""
     out = []
     for name in os.listdir(block_dir):
         if name.startswith("apply-"):
@@ -193,10 +178,10 @@ def _scatter_publish(
             me = me * blk["w"]
         _publish_arr(upd_dir, f"partial-{q}", np.add.reduceat(me, blk["starts"]))
     dang = float(rank[iod == 0.0].sum())
-    # stats-{q} = [dangling, max-delta]: dangling is a MESSAGE (peer apply
-    # tasks fold it next superstep); delta is the convergence statistic the
-    # DRIVER reads after the barrier — riding the same channel avoids a
-    # CollectMetrics node + listener wait per job entirely.
+    # stats-{q} = [dangling, max-delta], published LAST: its existence is
+    # the barrier signal that the partition's whole update stream is out.
+    # Dangling is a MESSAGE (peer apply tasks fold it next superstep);
+    # delta is the convergence statistic every task folds at the barrier.
     _publish_arr(upd_dir, f"stats-{q}", np.array([dang, delta]))
 
 
@@ -204,11 +189,11 @@ def _dangling_mass(upd_dir: str, qs) -> float:
     """Fixed-order fold of the per-partition dangling masses riding the
     update stream — every task computes the identical float.
 
-    ``qs`` is the exact set of non-empty state partitions, recorded once
-    by the init/scatter job: every one of them published a stats file with
-    its update stream (edge-less blocks included), so a missing file is a
-    publish or barrier failure — np.load's FileNotFoundError is the loud
-    failure we want, never a silent zero contribution."""
+    ``qs`` is the exact set of non-empty state partitions: every one of
+    them published a stats file with its update stream (edge-less blocks
+    included), so a missing file is a publish or barrier failure —
+    np.load's FileNotFoundError is the loud failure we want, never a
+    silent zero contribution."""
     dm = _DM_CACHE.get(upd_dir)
     if dm is not None:
         return dm
@@ -219,17 +204,6 @@ def _dangling_mass(upd_dir: str, qs) -> float:
         _DM_CACHE.clear()
     _DM_CACHE[upd_dir] = total
     return total
-
-
-def _read_delta(upd_dir: str, qs) -> float:
-    """Driver-side convergence read: max of the per-partition deltas
-    published with the update stream (file reads, no CollectMetrics).
-    Strict over the recorded non-empty partition set ``qs`` — a missing
-    stats file raises instead of understating the convergence delta."""
-    mx = 0.0
-    for q in qs:
-        mx = max(mx, float(np.load(os.path.join(upd_dir, f"stats-{q}.npy"))[1]))
-    return mx
 
 
 def _gather(plan, upd_dir: str, p: int) -> np.ndarray:
@@ -252,6 +226,317 @@ def _gather(plan, upd_dir: str, p: int) -> np.ndarray:
     return np.bincount(plan["apos"], weights=w, minlength=n_state)
 
 
+def _await_stats(upd_dir: str, qs, superstep: int, timeout: float) -> list:
+    """The file barrier: block until every ``stats-{q}`` of ``qs`` is
+    published in ``upd_dir``, then return them in ``qs`` order. A peer
+    that has not published within ``timeout`` seconds raises instead of
+    hanging the stage."""
+    missing = list(qs)
+    deadline = _time.monotonic() + timeout
+    pause = 1e-4
+    while missing:
+        while missing and os.path.exists(
+            os.path.join(upd_dir, f"stats-{missing[0]}.npy")
+        ):
+            missing.pop(0)
+        if not missing:
+            break
+        if _time.monotonic() > deadline:
+            raise RuntimeError(
+                f"stream barrier: superstep {superstep} timed out after "
+                f"{timeout:g} s; partitions {missing} never published"
+            )
+        _time.sleep(pause)
+        pause = min(pause * 2, 1e-3)
+    return [np.load(os.path.join(upd_dir, f"stats-{q}.npy")) for q in qs]
+
+
+def _fold(stats: list, stat: str) -> float:
+    """Global convergence statistic from the barrier's stats, in fixed
+    partition order: max |Δ| for ``"delta"``, total for ``"changed"``."""
+    vals = [float(s[1]) for s in stats]
+    return max(vals, default=0.0) if stat == "delta" else float(sum(vals))
+
+
+def _segment(kern, token, block_dir, p, qs, S, root, s0, s1, stat,
+             converged, timeout):
+    """Task side of one segment: supersteps s0+1 .. s1 (fewer on
+    convergence) over the partitions this task owns. Input rows are
+    ``(part, blob)``; a NULL blob starts from ``kern.init_blob``."""
+
+    def run(batches):
+        from pyspark import BarrierTaskContext
+
+        ctx = BarrierTaskContext.get()
+        t = ctx.partitionId()
+        seg = os.path.join(root, f"s{s0}")
+        os.makedirs(seg, exist_ok=True)
+        # Attempt index = this task's start-marker count: a retried stage
+        # attempt reports attemptNumber() 0 again, but every task of
+        # attempt a has written exactly a+1 markers.
+        open(os.path.join(seg, f"start-{t}-{ctx.taskAttemptId()}"), "w").close()
+        a = sum(n.startswith(f"start-{t}-") for n in os.listdir(seg)) - 1
+        att = os.path.join(seg, f"a{a}")
+
+        def ud(s):
+            return os.path.join(att, str(s))
+
+        items = [
+            kv for pdf in batches
+            for kv in zip(pdf[PART].tolist(), pdf[BLOB].tolist())
+        ]
+        blob_ok = getattr(kern, "blob_ok", lambda n, ln: n == ln)
+        plans, blks, state = {}, {}, {}
+        for q, blob in sorted(items, key=lambda kv: kv[0]):
+            plan = _load_apply_plan(token, q, block_dir)
+            if plan is None or blob is not None and not blob_ok(
+                len(plan["ids"]), len(blob) // np.dtype(kern.dtype).itemsize
+            ):
+                raise RuntimeError(
+                    f"{kern.name} apply: blob/plan mismatch at partition {q}"
+                )
+            plans[q], state[q] = plan, (
+                kern.init_blob(np.asarray(plan["ids"])) if blob is None
+                else np.frombuffer(blob, dtype=kern.dtype)
+            )
+            blks[q] = _load_disk_block(token, q, block_dir)
+        if list(state) != [q for q in qs if q % S == t]:
+            raise RuntimeError(
+                f"{kern.name}: task {t} got state partitions {list(state)}"
+            )
+        hist = []
+        if s1 > s0:
+            for q, x in state.items():
+                kern.scatter(ud(s0), q, blks[q], x, float("inf"))
+            _await_stats(ud(s0), qs, s0, timeout)
+            tb = _time.perf_counter()
+            s = s0
+            while s < s1:
+                s += 1
+                for q in state:
+                    new, st = kern.gather_apply(plans[q], ud(s - 1), p, q, state[q])
+                    kern.scatter(ud(s), q, blks[q], new, float(st))
+                    state[q] = new
+                tw = _time.perf_counter()
+                value = _fold(_await_stats(ud(s), qs, s, timeout), stat)
+                now = _time.perf_counter()
+                if t == 0:
+                    # Every task has published step s, so step s-1's
+                    # update stream is fully consumed.
+                    shutil.rmtree(ud(s - 1), ignore_errors=True)
+                    hist.append((s, now - tb, now - tw, value))
+                tb = now
+                if converged(value):
+                    break
+        if t == 0:
+            _publish_arr(att, "hist", np.array(hist, dtype=np.float64).reshape(-1, 4))
+        yield pd.DataFrame({
+            PART: list(state), BLOB: [x.tobytes() for x in state.values()],
+        })
+
+    return run
+
+
+def _segment_history(root: str, s0: int) -> np.ndarray:
+    """Task 0's per-superstep records of segment ``s0``, from its latest
+    attempt (the one whose output the job kept)."""
+    seg = os.path.join(root, f"s{s0}")
+    done = [
+        int(n[1:]) for n in os.listdir(seg)
+        if n.startswith("a") and os.path.exists(os.path.join(seg, n, "hist.npy"))
+    ]
+    return np.load(os.path.join(seg, f"a{max(done)}", "hist.npy"))
+
+
+def _spark_hash_int(v: int) -> int:
+    """Spark's ``hash()`` of an int value (Murmur3_x86_32.hashInt, seed
+    42), as a signed 32-bit int."""
+    m = 0xFFFFFFFF
+
+    def rotl(x, r):
+        return ((x << r) | (x >> (32 - r))) & m
+
+    k = rotl((v & m) * 0xCC9E2D51 & m, 15) * 0x1B873593 & m
+    h = ((rotl(42 ^ k, 13) * 5 + 0xE6546B64) & m) ^ 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >= 1 << 31 else h
+
+
+def _route(df: DataFrame, S: int) -> DataFrame:
+    """Hash-repartition ``(part, blob)`` rows so that task t receives
+    exactly the partitions q ≡ t (mod S): each row is keyed by the
+    smallest int whose Spark hash partition is q % S."""
+    keys: dict[int, int] = {}
+    k = 0
+    while len(keys) < S:
+        keys.setdefault(_spark_hash_int(k) % S, k)
+        k += 1
+    key = F.element_at(
+        F.array(*[F.lit(keys[t]) for t in range(S)]),
+        F.pmod(F.col(PART), F.lit(S)) + 1,
+    )
+    return df.select(PART, BLOB).repartition(S, key)
+
+
+def run_resident(
+    spark: SparkSession,
+    g: CsrGraph,
+    kern,
+    max_iters: int,
+    stat: str,
+    converged,
+    init: DataFrame | None = None,
+    checkpointer: CheckpointManager | None = None,
+    checkpoint_every: int = 5,
+    state_partitions: int | None = None,
+) -> RunResult:
+    """Drive a blob kernel over resident barrier-stage tasks (module
+    docstring) and expand the final blobs to ``kern.out_schema`` rows.
+
+    ``kern`` supplies ``dtype``, ``name``, ``out_schema``,
+    ``init_blob(ids)``, ``scatter(upd_dir, q, blk, state, stat)``,
+    ``gather_apply(plan, upd_dir, p, q, prev) -> (state, stat)``,
+    ``expand_pdf(plan, blob)`` and optionally ``blob_ok(n, len)``.
+    ``stat`` names the per-partition statistic (``"delta"`` folds by max,
+    ``"changed"`` by sum); ``converged(value)`` stops the run. ``init``:
+    a ``(part, blob)`` starting frame (default: ``kern.init_blob`` per
+    partition). A checkpoint resume, when present, takes precedence.
+    """
+    sc = spark.sparkContext
+    p, token, block_dir = g.p, g.cache_token, g.block_dir
+    qs = _apply_parts(block_dir)
+    slots = sc.defaultParallelism // int(sc.getConf().get("spark.task.cpus", "1"))
+    S = max(1, min(state_partitions or p, slots, len(qs)))
+    timeout = float(
+        sc._jsc.sc().conf().getTimeAsSeconds("spark.network.timeout", "120s")
+    )
+    root = os.path.join(block_dir, f"upd-{uuid.uuid4().hex[:8]}")
+    start = 0
+    if checkpointer is not None:
+        manifest = checkpointer.latest()
+        if manifest is not None:
+            start = int(manifest["superstep"])
+            init = checkpointer.load(spark, manifest)
+    history: list[dict] = []
+    t, done = start, False
+
+    def absorb(s0: int) -> int:
+        """Append segment s0's history; return its last superstep."""
+        nonlocal done
+        last = s0
+        for s, sec, wait, value in _segment_history(root, s0):
+            last = int(s)
+            done = bool(converged(value))
+            history.append({
+                "superstep": last, "seconds": round(float(sec), 4),
+                "wait_s": round(float(wait), 4),
+                stat: float(value) if stat == "delta" else int(value),
+                "converged": done,
+            })
+        return last
+
+    # AQE off: every frame here is a handful of blob rows, and the init
+    # frame's task index must stay its partition id.
+    with superstep_conf(spark, p, adaptive=False):
+        if init is None:
+            init = spark.createDataFrame(
+                pd.DataFrame({PART: np.array(qs, dtype=np.int32), BLOB: None}),
+                _STATE_SCHEMA,
+            )
+        inp = _route(init, S)
+        kept = None
+        try:
+            while True:
+                s1 = max(t, max_iters if checkpointer is None else min(
+                    max_iters, (t // checkpoint_every + 1) * checkpoint_every
+                ))
+                out = _route(inp.mapInPandas(_segment(
+                    kern, token, block_dir, p, qs, S, root, t, s1, stat,
+                    converged, timeout,
+                ), schema=_STATE_SCHEMA, barrier=True), S)
+                if checkpointer is None:
+                    break
+                # Runs the segment; its routed output is the next input.
+                out = out.localCheckpoint(eager=True)
+                if kept is not None:
+                    release_state(kept)
+                kept = out
+                s0, t = t, absorb(t)
+                if t > s0 and (done or t % checkpoint_every == 0):
+                    checkpointer.save(out, t, metrics=history[-1])
+                if done or t >= max_iters:
+                    break
+                inp = out
+
+            def expand(batches):
+                for pdf in batches:
+                    for q, blob in zip(pdf[PART].tolist(), pdf[BLOB].tolist()):
+                        plan = _load_apply_plan(token, int(q), block_dir)
+                        yield kern.expand_pdf(plan, blob)
+
+            # Eager localCheckpoint: the expanded rows must never be
+            # recomputed — they read apply plans that may live in an
+            # EPHEMERAL block dir the caller reclaims.
+            state = out.mapInPandas(
+                expand, schema=kern.out_schema
+            ).localCheckpoint(eager=True)
+            if checkpointer is None:
+                t = absorb(t)
+        finally:
+            if kept is not None:
+                release_state(kept)
+            shutil.rmtree(root, ignore_errors=True)
+    return RunResult(state=state, supersteps=t, converged=done, history=history)
+
+
+class _PageRankKernel:
+    """Scatter-sum PageRank blob kernel (module docstring). ``src_arr``:
+    personalized PageRank's sorted source ids, or None."""
+
+    dtype = np.float64
+    out_schema = f"{ID} long, rank double"
+    name = "stream"
+
+    def __init__(self, token, block_dir, n, damping, src_arr, qs):
+        self.token, self.block_dir, self.qs = token, block_dir, qs
+        self.n, self.damping, self.src_arr = n, damping, src_arr
+
+    def _pref(self, ids: np.ndarray) -> np.ndarray | float:
+        """Per-partition preference vector (uniform 1/n when no sources)."""
+        if self.src_arr is None:
+            return 1.0 / self.n
+        return np.isin(ids, self.src_arr).astype(np.float64) / len(self.src_arr)
+
+    def init_blob(self, ids: np.ndarray) -> np.ndarray:
+        if self.src_arr is not None:
+            return np.asarray(self._pref(ids))  # PPR: rank0 = pref
+        return np.full(len(ids), 1.0 / self.n)
+
+    def scatter(self, upd_dir, q, blk, rank, delta) -> None:
+        plan = _load_apply_plan(self.token, q, self.block_dir)
+        _scatter_publish(upd_dir, q, blk, rank, np.asarray(plan["iod"]), delta)
+
+    def gather_apply(self, plan, upd_dir, p, q, prev):
+        d, n = self.damping, self.n
+        dm = _dangling_mass(upd_dir, self.qs)
+        contrib = _gather(plan, upd_dir, p)
+        if self.src_arr is None:
+            rank = (1.0 - d) / n + d * (contrib + dm / n)
+        else:
+            pref = self._pref(np.asarray(plan["ids"]))
+            rank = (1.0 - d) * pref + d * (contrib + dm * pref)
+        delta = float(np.max(np.abs(rank - prev))) if len(rank) else 0.0
+        return rank, delta
+
+    def expand_pdf(self, plan, blob: bytes) -> pd.DataFrame:
+        return pd.DataFrame({
+            ID: np.asarray(plan["ids"]),
+            "rank": np.frombuffer(blob, np.float64),
+        })
+
+
 def pagerank_stream(
     spark: SparkSession,
     edges: DataFrame,
@@ -265,12 +550,11 @@ def pagerank_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
-    chain: int = 1,
     init_ranks: DataFrame | None = None,
     sources: list[int] | None = None,
     num_edges: int | None = None,
 ) -> RunResult:
-    """PageRank over the fused streaming-partition superstep.
+    """PageRank over the resident streaming-partition superstep.
 
     ``sources``: personalized PageRank — teleport and dangling
     redistribution follow ``pref(v) = 1/|S|`` on the source set (0
@@ -282,20 +566,13 @@ def pagerank_stream(
 
     Same semantics as algos.pagerank: damping with
     dangling-mass redistribution, convergence when max |Δrank| < tol,
-    superstep count identical to the join path (for chain=1; see module
-    docstring for the chain>1 convergence granularity). ``graph`` lets
+    superstep count identical to the join path. ``graph`` lets
     callers (bench warmup → timed run) reuse a built CsrGraph.
 
-    ``state_partitions``: physical partition count of the BLOB state —
-    independent of the block count p, because every kernel routes by the
-    row's ``part`` value, never by task index. Blob rows are ~|V|/p x 8
-    bytes, so the per-task mapInPandas machinery (JVM task setup, Python
-    worker round trip, Arrow stream open/close — measured ~0.13 s/task
-    against ~0.03 s of kernel math on the 64M-edge bench graph) dominates
-    when each task carries ONE row; packing several blob rows per task
-    amortizes it. Default p (one row per task).
-
-    ``chain``: supersteps per Spark job (module docstring). Default 1.
+    ``state_partitions``: resident task count S, clamped to the free
+    task slots (``defaultParallelism // spark.task.cpus``); default p.
+    Task t owns the partitions q ≡ t (mod S). Every kernel routes by the
+    partition id, never by task index, so S never changes results.
 
     ``init_ranks``: warm-start from a prior ``(id, rank)`` frame — same
     contract as algos.pagerank (prior taken verbatim, absent vertices
@@ -315,53 +592,17 @@ def pagerank_stream(
         spark, edges, num_partitions=num_partitions, token=token,
         weight_col=weight_col, num_edges=num_edges,
     )
-    if chain < 1:
-        raise ValueError("chain must be >= 1")
     n = g.num_vertices
-    p = g.p
     token_, block_dir = g.cache_token, g.block_dir
-    run_id = uuid.uuid4().hex[:8]
-    damping = float(damping)
     if sources is not None and not sources:
         raise ValueError("sources must be a non-empty id list")
     src_arr = (
         None if sources is None
         else np.unique(np.asarray(sorted(int(s) for s in sources), np.int64))
     )
-
-    def _pref(ids: np.ndarray) -> np.ndarray | float:
-        """Per-partition preference vector (uniform 1/n when no sources)."""
-        if src_arr is None:
-            return 1.0 / n
-        return np.isin(ids, src_arr).astype(np.float64) / len(src_arr)
-
-    def range_init_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def range_init_kernel(batches):
-            # Cold init (v6): blobs are derived straight from the apply
-            # plans' sorted id vectors over a shuffle-free spark.range(p)
-            # — no vertex rows cross the boundary at all (the plan IS the
-            # authoritative layout; runtime alignment stays checked by
-            # every apply/expand kernel). The initial scatter is FUSED in
-            # (publish the starting update stream here), so cold init is
-            # ONE job instead of init + scatter.
-            for pdf in batches:
-                for qv in pdf["id"].tolist():
-                    q = int(qv)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    if plan is None:
-                        continue
-                    ids = np.asarray(plan["ids"])
-                    if src_arr is not None:
-                        rank = np.asarray(_pref(ids))  # PPR: rank0 = pref
-                    else:
-                        rank = np.full(len(ids), 1.0 / n)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud, q, blk, rank, np.asarray(plan["iod"]))
-                    yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
-
-        return range_init_kernel
+    kern = _PageRankKernel(
+        token_, block_dir, n, float(damping), src_arr, _apply_parts(block_dir)
+    )
 
     def init_kernel(batches):
         # Warm init (init_ranks): prior ranks ride the seed rows, aligned
@@ -386,266 +627,23 @@ def pagerank_stream(
                 "stream init: state partition ids do not match the "
                 f"apply plan for partition {q} — partitioner mismatch"
             )
-        if "_prank" in pdf.columns:
-            # Warm start: prior ranks ride the seed rows (left join on
-            # id); NaN = vertex absent from the prior -> 1/n (the join
-            # path's seed_ranks fill, sources or not).
-            rank = pdf["_prank"].to_numpy(dtype=np.float64).copy()
-            rank[np.isnan(rank)] = 1.0 / n
-        elif src_arr is not None:
-            rank = np.asarray(_pref(ids))  # PPR start: rank0 = pref
-        else:
-            rank = np.full(len(ids), 1.0 / n)
+        # Prior ranks ride the seed rows (left join on id); NaN = vertex
+        # absent from the prior -> 1/n (the join path's seed_ranks fill,
+        # sources or not).
+        rank = pdf["_prank"].to_numpy(dtype=np.float64).copy()
+        rank[np.isnan(rank)] = 1.0 / n
         yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
 
-    def scatter_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def scatter_only(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    rank = np.frombuffer(row[BLOB], dtype=np.float64)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud, q, blk, rank, np.asarray(plan["iod"]))
-                    yield pd.DataFrame({PART: [q], "n": [len(rank)]})
-
-        return scatter_only
-
-    def fused_kernel_for(superstep: int, qs: tuple):
-        """Apply step ``superstep`` (reads upd of superstep-1), then
-        scatter for step superstep+1 (writes upd of superstep). ``qs`` is
-        the recorded non-empty state-partition set (strict stats fold)."""
-        ud_in = _upd_dir(block_dir, run_id, superstep - 1)
-        ud_out = _upd_dir(block_dir, run_id, superstep)
-
-        def fused(batches):
-            prof_dir = os.environ.get("CHAOS_STREAM_PROF")
-            t00 = _time.perf_counter()
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    t0 = _time.perf_counter()
-                    q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=np.float64)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    if plan is None or len(plan["iod"]) != len(prev):
-                        raise RuntimeError(
-                            f"stream apply: blob/plan mismatch at partition {q}"
-                        )
-                    dm = _dangling_mass(ud_in, qs)
-                    contrib = _gather(plan, ud_in, p)
-                    iod = np.asarray(plan["iod"])
-                    if src_arr is None:
-                        rank = (1.0 - damping) / n + damping * (contrib + dm / n)
-                    else:
-                        pref = _pref(np.asarray(plan["ids"]))
-                        rank = (1.0 - damping) * pref + damping * (
-                            contrib + dm * pref
-                        )
-                    delta = float(np.max(np.abs(rank - prev))) if len(rank) else 0.0
-                    t1 = _time.perf_counter()
-                    blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud_out, q, blk, rank, iod, delta)
-                    t2 = _time.perf_counter()
-                    if prof_dir:
-                        _prof_write(prof_dir, superstep, q, t00, t0, t1, t2)
-                    yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
-
-        return fused
-
-    sp = state_partitions or p
-
-    def realign(df: DataFrame) -> DataFrame:
-        # Blob rows are self-describing (routed by their part value) —
-        # round-robin just spreads them evenly over tasks again after a
-        # parquet round trip; placement never affects results.
-        return df.repartition(sp)
-
-    start = 0
-    state = None
-    if checkpointer is not None:
-        manifest = checkpointer.latest()
-        if manifest is not None:
-            start = int(manifest["superstep"])
-            state = realign(checkpointer.load(spark, manifest))
-
-    with superstep_conf(spark, p):
-        # The exact set of non-empty state partitions: exactly the vertex
-        # partitions the build wrote an apply plan for (a blob row exists
-        # iff the partition has vertices). The strict stats fold
-        # (_dangling_mass/_read_delta) checks precisely these files each
-        # superstep, so a publish/barrier failure raises instead of
-        # folding a silently-wrong dangling mass or delta.
-        qs = _apply_parts(block_dir)
-        if state is None and init_ranks is None:
-            # ONE fused init+scatter job (see range_init_kernel_for).
-            state = spark.range(0, p, 1, p).mapInPandas(
-                range_init_kernel_for(start), schema=_STATE_SCHEMA
-            ).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-        else:
-            if state is None:
-                pri = init_ranks.select(
-                    F.col(ID), F.col("rank").cast("double").alias("_prank")
-                )
-                seed = g.verts.join(pri, ID, "left")
-                state = g.align_state(seed).mapInPandas(
-                    init_kernel, schema=_STATE_SCHEMA
-                ).localCheckpoint(eager=True)
-            else:
-                state = state.select(PART, BLOB).localCheckpoint(eager=True)
-            if sp != p:
-                # Lazy checkpoint: the scatter job below is the action
-                # that materializes the repacked layout.
-                state = materialize(state.repartition(sp))
-            # Publish the update stream of the starting state (derived
-            # state: regenerated rather than checkpointed — it also
-            # carries the dangling mass). One tiny job, warm-init/resume
-            # only — steady-state supersteps publish inside the fused
-            # stage.
-            rows = state.mapInPandas(
-                scatter_kernel_for(start), schema=f"{PART} int, n long"
-            ).collect()
-            assert sum(r["n"] for r in rows) == n
-            assert tuple(sorted(int(r[PART]) for r in rows)) == qs
-
-        try:
-            fk = lambda s: fused_kernel_for(s, qs)  # noqa: E731
-            read_delta = lambda s: _read_delta(  # noqa: E731
-                _upd_dir(block_dir, run_id, s), qs
-            )
-            if chain == 1:
-                result = _run_unchained(
-                    state, fk, max_iters, checkpointer,
-                    _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
-                    start, realign, tol, read_delta,
-                    lambda s: _upd_cleanup(block_dir, run_id, s),
-                )
-            else:
-                result = _run_chained(
-                    state, fk, max_iters, checkpointer,
-                    checkpoint_every, start, tol, chain, sp, read_delta,
-                    lambda lo, hi: _upd_cleanup_range(block_dir, run_id, lo, hi),
-                )
-
-            def expand(batches):
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        q = int(row[PART])
-                        plan = _load_apply_plan(token_, q, block_dir)
-                        yield pd.DataFrame({
-                            ID: np.asarray(plan["ids"]),
-                            "rank": np.frombuffer(row[BLOB], np.float64),
-                        })
-
-            blob_state = result.state
-            result.state = blob_state.mapInPandas(
-                expand, schema=f"{ID} long, rank double"
-            ).persist()
-            result.state.count()  # blob rows may live in an ephemeral dir
-        finally:
-            # Update streams are derived per-run state — always reclaimed.
-            import glob as _glob
-
-            for d in _glob.glob(
-                os.path.join(block_dir, f"upd-{run_id}-*")
-            ):
-                shutil.rmtree(d, ignore_errors=True)
-    return result
-
-
-def _upd_cleanup(block_dir: str, run_id: str, superstep: int) -> None:
-    shutil.rmtree(_upd_dir(block_dir, run_id, superstep), ignore_errors=True)
-
-
-def _upd_cleanup_range(block_dir: str, run_id: str, lo: int, hi: int) -> None:
-    for s in range(lo, hi):
-        _upd_cleanup(block_dir, run_id, s)
-
-
-def _run_unchained(
-    state, fused_kernel_for, max_iters, checkpointer, checkpoint_every,
-    start, realign, tol, read_delta, cleanup,
-) -> RunResult:
-    """chain=1: one fused job per superstep, driven by the generic
-    engine loop (checkpoint cadence, steal accounting, release_state)."""
-
-    def step(cur: DataFrame, superstep: int):
-        pre = cur.mapInPandas(fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA)
-        maybe_explain(pre, "superstep")
-        new = pre.localCheckpoint(eager=True)
-        # Convergence statistic rides the update stream (no CollectMetrics
-        # node, no listener wait): the barrier just completed, so the
-        # stats files of step superstep+1 are all published.
-        delta = read_delta(superstep + 1)
-        # Step superstep+1 published upd-(superstep+1) and consumed
-        # upd-superstep; upd-(superstep-1) is now unreachable.
-        if superstep >= 1:
-            cleanup(superstep - 1)
-        return new, {"converged": delta < tol, "delta": delta}
-
-    return run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every,
-        start_superstep=start, realign=realign,
-    )
-
-
-def _run_chained(
-    state, fused_kernel_for, max_iters, checkpointer, checkpoint_every,
-    start, tol, chain, sp, read_delta, cleanup_range,
-) -> RunResult:
-    """chain>1: K fused layers per Spark job. The round-robin repartition
-    of the p blob rows between layers is the superstep barrier (a shuffle
-    dependency: no layer-t+1 task starts before every layer-t task has
-    published its update stream). Per-layer convergence rides the per-layer
-    update-stream stats files (read by the driver after the job, before
-    cleanup); per-layer seconds are the job wall amortized over its layers
-    (the barriers are internal, so finer attribution would be fiction)."""
-    history: list[dict] = []
-    t = start
-    converged = False
-    prev = None
-    while t < max_iters and not converged:
-        k = min(chain, max_iters - t)
-        cpu0 = _host_cpu_jiffies()
-        t0 = _time.time()
-        df = state
-        for i in range(1, k + 1):
-            df = df.mapInPandas(fused_kernel_for(t + i), schema=_STATE_SCHEMA)
-            if i < k:
-                df = df.repartition(sp)
-        new = df.localCheckpoint(eager=True)
-        wall = _time.time() - t0
-        cpu1 = _host_cpu_jiffies()
-        steal = None
-        if cpu0 is not None and cpu1 is not None and cpu1[1] > cpu0[1]:
-            steal = round((cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]), 4)
-        deltas = [read_delta(t + i) for i in range(1, k + 1)]
-        for i, dlt in enumerate(deltas):
-            entry = {
-                "superstep": t + i + 1,
-                "seconds": round(wall / k, 4),
-                "delta": dlt,
-                "chained": k,
-            }
-            if steal is not None:
-                entry["steal_frac"] = steal
-            history.append(entry)
-        converged = tol > 0 and any(d < tol for d in deltas)
-        # Layers consumed upd[t .. t+k-1]; upd[t+k] feeds the next job.
-        cleanup_range(t, t + k)
-        if prev is not None:
-            release_state(prev)
-        prev, state = state, new
-        t_before = t
-        t += k
-        if checkpointer and (
-            converged
-            or (t // checkpoint_every) > (t_before // checkpoint_every)
-        ):
-            checkpointer.save(state, t, metrics=history[-1])
-    return RunResult(
-        state=state, supersteps=t, converged=converged, history=history
+    init = None
+    if init_ranks is not None:
+        pri = init_ranks.select(
+            F.col(ID), F.col("rank").cast("double").alias("_prank")
+        )
+        init = g.align_state(g.verts.join(pri, ID, "left")).mapInPandas(
+            init_kernel, schema=_STATE_SCHEMA
+        )
+    return run_resident(
+        spark, g, kern, max_iters, "delta", lambda v: v < tol, init=init,
+        checkpointer=checkpointer, checkpoint_every=checkpoint_every,
+        state_partitions=state_partitions,
     )

@@ -8,11 +8,12 @@ mode-label blob kernel needs").
 Same execution shape as stream.pagerank_stream ([C15] §4 slipstore /
 [X13] §3.2 update streams; see that module's docstring for the full
 design): vertex state is ONE int64 label blob per streaming partition,
-the superstep is ONE narrow mapInPandas stage fusing apply+scatter, the
-eager localCheckpoint is the barrier, update streams are per-target
+held by resident barrier-stage tasks that fuse apply+scatter per
+superstep (stream.run_resident), update streams are per-target
 contiguous slices in the shared block_dir, and the convergence statistic
-(count of changed labels) rides the update stream's stats files — zero
-driver round-trips inside the loop.
+(count of changed labels) rides the update stream's stats files, whose
+publication is also the superstep barrier — zero driver round-trips and
+zero Spark jobs inside the loop.
 
 Per-algorithm update streams over the SAME v5 blocks and apply plans
 (csr.py — no new build pass):
@@ -67,7 +68,7 @@ join paths (cc: min-fold is order-free; lpa: integer counts and
 deterministic min-tie). Convergence = zero changed labels,
 identical to algos.cc/algos.lpa. Checkpoint/resume mirrors
 pagerank_stream: blob state through CheckpointManager; update streams are
-derived state, regenerated by one scatter-only job on resume.
+derived state, regenerated by every segment from its starting blobs.
 Parity-tested in tests/test_stream_algos.py.
 
 Scale notes (100 TB / 1000-executor design review): per superstep each
@@ -105,7 +106,6 @@ from .csr import CsrGraph, _load_apply_plan, _load_disk_block
 from .engine import (
     RunResult,
     materialize,
-    maybe_explain,
     release_state,
     run_supersteps,
     superstep_conf,
@@ -115,25 +115,14 @@ from .stream import (
     BLOB,
     PART,
     _STATE_SCHEMA,
-    _apply_parts,
     _loop_checkpoint_every,
     _publish_arr,
     _upd_dir,
+    run_resident,
 )
 
 _PACK_BITS = np.int64(31)
 _PACK_MASK = np.int64(2**31 - 1)
-
-
-def _read_changed(upd_dir: str, qs) -> float:
-    """Driver-side convergence read: TOTAL changed labels across the
-    recorded non-empty partitions (sum-fold of the stats files riding the
-    update stream — same strict contract as stream._read_delta: a missing
-    file raises instead of understating the change count)."""
-    total = 0.0
-    for q in qs:
-        total += float(np.load(os.path.join(upd_dir, f"stats-{q}.npy"))[1])
-    return total
 
 
 def _min_fold_gather(plan, upd_dir: str, p: int, q: int,
@@ -778,168 +767,22 @@ def _label_stream(
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
 ) -> RunResult:
-    """Generic fused-stream vertex-state loop shared by cc_stream /
-    lpa_stream / sssp_stream / bfs_stream.
-
-    Mirrors stream.pagerank_stream's structure 1:1 (init blob job →
-    initial scatter job recording the non-empty partition set → one fused
-    mapInPandas job per superstep with the eager-localCheckpoint barrier
-    → expand). State blob = the partition's ``algo.dtype`` state vector
-    aligned to the apply plan's sorted id vector; init / graph flavor /
-    output rows come from the algo object (int64 own-id labels over
-    undirected blocks for CC/LPA; float64 root-seeded distances over
+    """Generic vertex-state loop shared by cc_stream / lpa_stream /
+    sssp_stream / bfs_stream / hyperanf_stream / kcore_stream /
+    mis_stream / bipartite_stream: the same resident runner as
+    stream.pagerank_stream (stream.run_resident), converging when no
+    label changed. State blob = the partition's ``algo.dtype`` state
+    vector aligned to the apply plan's sorted id vector; init / graph
+    flavor / output rows come from the algo object (int64 own-id labels
+    over undirected blocks for CC/LPA; float64 root-seeded distances over
     directed, optionally weighted blocks for SSSP/BFS).
     """
     g = graph or algo.prep_graph(spark, edges, num_partitions, token)
-    n = g.num_vertices
-    p = g.p
-    token_, block_dir = g.cache_token, g.block_dir
-    run_id = uuid.uuid4().hex[:8]
-
-    def init_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def init_kernel(batches):
-            # Cold init (v6): blobs derive straight from the apply plans'
-            # sorted id vectors over a shuffle-free spark.range(p) — no
-            # vertex rows cross the boundary (the plan IS the
-            # authoritative layout; runtime alignment stays checked by
-            # the apply/expand kernels' blob/plan length guards). The
-            # initial scatter is FUSED in: cold init is ONE job.
-            for pdf in batches:
-                for qv in pdf["id"].tolist():
-                    q = int(qv)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    if plan is None:
-                        continue
-                    ids = np.asarray(plan["ids"])
-                    blob = algo.init_blob(ids)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud, q, blk, blob, float("inf"))
-                    yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
-
-        return init_kernel
-
-    def scatter_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def scatter_only(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    labels = np.frombuffer(row[BLOB], dtype=algo.dtype)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud, q, blk, labels, float("inf"))
-                    # Vertex count from the apply plan, not len(labels):
-                    # multi-word-per-vertex blobs (HyperANF registers +
-                    # nf history) have len(labels) != |V_q|.
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    yield pd.DataFrame({PART: [q], "n": [len(plan["ids"])]})
-
-        return scatter_only
-
-    def fused_kernel_for(superstep: int):
-        ud_in = _upd_dir(block_dir, run_id, superstep - 1)
-        ud_out = _upd_dir(block_dir, run_id, superstep)
-
-        def fused(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=algo.dtype)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    blob_ok = getattr(
-                        algo, "blob_ok", lambda n, ln: n == ln
-                    )
-                    if plan is None or not blob_ok(len(plan["ids"]), len(prev)):
-                        raise RuntimeError(
-                            f"{algo.name} apply: blob/plan mismatch at partition {q}"
-                        )
-                    new, changed = algo.gather_apply(plan, ud_in, p, q, prev)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud_out, q, blk, new, float(changed))
-                    yield pd.DataFrame({PART: [q], BLOB: [new.tobytes()]})
-
-        return fused
-
-    sp = state_partitions or p
-
-    def realign(df: DataFrame) -> DataFrame:
-        return df.repartition(sp)
-
-    start = 0
-    state = None
-    if checkpointer is not None:
-        manifest = checkpointer.latest()
-        if manifest is not None:
-            start = int(manifest["superstep"])
-            state = realign(checkpointer.load(spark, manifest))
-
-    with superstep_conf(spark, p):
-        qs = _apply_parts(block_dir)
-        if state is None:
-            # ONE fused init+scatter job (see init_kernel_for).
-            state = spark.range(0, p, 1, p).mapInPandas(
-                init_kernel_for(start), schema=_STATE_SCHEMA
-            ).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-        else:
-            state = state.select(PART, BLOB).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-            # Update stream of the starting state: derived state,
-            # regenerated on resume (one tiny job); steady-state
-            # supersteps publish inside the fused stage.
-            rows = state.mapInPandas(
-                scatter_kernel_for(start), schema=f"{PART} int, n long"
-            ).collect()
-            assert sum(r["n"] for r in rows) == n
-            assert tuple(sorted(int(r[PART]) for r in rows)) == qs
-
-        try:
-            def step(cur: DataFrame, superstep: int):
-                pre = cur.mapInPandas(
-                    fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA
-                )
-                maybe_explain(pre, "superstep")
-                new = pre.localCheckpoint(eager=True)
-                changed = int(_read_changed(
-                    _upd_dir(block_dir, run_id, superstep + 1), qs
-                ))
-                if superstep >= 1:
-                    shutil.rmtree(
-                        _upd_dir(block_dir, run_id, superstep - 1),
-                        ignore_errors=True,
-                    )
-                return new, {"converged": changed == 0, "changed": changed}
-
-            result = run_supersteps(
-                state, step, max_iters, checkpointer,
-                _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
-                start_superstep=start, realign=realign,
-            )
-
-            def expand(batches):
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        q = int(row[PART])
-                        plan = _load_apply_plan(token_, q, block_dir)
-                        yield algo.expand_pdf(plan, row[BLOB])
-
-            blob_state = result.state
-            # Eager localCheckpoint (not persist): the expanded rows must
-            # never be recomputed — the apply plans they read may be an
-            # EPHEMERAL block dir reclaimed by g.unpersist() below.
-            result.state = blob_state.mapInPandas(
-                expand, schema=algo.out_schema
-            ).localCheckpoint(eager=True)
-            release_state(blob_state)
-        finally:
-            import glob as _glob
-
-            for d in _glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
-                shutil.rmtree(d, ignore_errors=True)
+    result = run_resident(
+        spark, g, algo, max_iters, "changed", lambda c: c == 0,
+        checkpointer=checkpointer, checkpoint_every=checkpoint_every,
+        state_partitions=state_partitions,
+    )
     if graph is None:
         g.unpersist()
     return result

@@ -4,7 +4,8 @@ pagerank_stream must compute the same fixed point, in the same number of
 supersteps, as the DataFrame join path — allclose (float association
 differs across paths), exact id set, rank mass 1. Plus the stream-specific
 invariants: resume from a mid-run checkpoint equals the uninterrupted run
-(update streams are regenerated, not checkpointed), and weighted graphs
+(update streams are regenerated, not checkpointed), a run split into
+checkpointed segments equals the one-segment run, and weighted graphs
 ride the same blocks and reject the same bad weights.
 """
 
@@ -100,83 +101,78 @@ def test_pagerank_stream_rejects_bad_weights(spark, monkeypatch, route, bad):
         run()
 
 
-def test_pagerank_stream_chained_equals_unchained(spark):
-    # chain=K stacks K supersteps per Spark job with shuffle barriers;
-    # fixed-iteration runs must produce identical results (same kernels,
-    # same fixed-order dangling fold) and the same superstep count.
+def test_pagerank_stream_segments_equal_one_segment(spark, tmp_path):
+    # checkpoint_every=4 over 9 fixed supersteps runs three segments
+    # (4 + 4 + 1), each a fresh barrier stage that regenerates the update
+    # stream of its starting blobs: bit-equal to the one-segment run.
     pdf = g4_powerlaw(scale=9, num_edges=3000)
     edges = spark.createDataFrame(pdf)
-    a = pagerank_stream(spark, edges, tol=0.0, max_iters=9, chain=1)
-    b = pagerank_stream(spark, edges, tol=0.0, max_iters=9, chain=4)
+    a = pagerank_stream(spark, edges, tol=0.0, max_iters=9)
+    cp = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream",
+                           {"tol": 0.0, "graph": "g4s9"})
+    b = pagerank_stream(spark, edges, tol=0.0, max_iters=9,
+                        checkpointer=cp, checkpoint_every=4)
     assert a.supersteps == b.supersteps == 9
-    ra, rb = _ranks(a), _ranks(b)
-    assert set(ra) == set(rb)
-    ks = sorted(ra)
-    assert np.allclose([ra[k] for k in ks], [rb[k] for k in ks],
-                       rtol=0, atol=1e-15)
-    # per-layer deltas observed inside the chained jobs match unchained
-    da = [h["delta"] for h in a.history]
-    db = [h["delta"] for h in b.history]
-    assert np.allclose(da[1:], db[1:], rtol=1e-9, atol=1e-15)
+    assert [m["superstep"] for m in cp.manifests()] == [4, 8]
+    assert _ranks(a) == _ranks(b)
+    assert [h["delta"] for h in a.history] == [h["delta"] for h in b.history]
 
 
-def test_pagerank_stream_chained_with_tol_overshoot_bounded(spark):
-    # ADVICE r4: chain>1 + tol>0 was untested. Contract (module docstring):
-    # the chained run stops at the first JOB whose layers converged, so it
-    # may run up to chain-1 supersteps PAST the unchained convergence
-    # point — never fewer, never more than that, and the returned state is
-    # at least as converged (its last observed delta is also under tol).
+def test_pagerank_stream_segmented_tol_stops_exactly(spark, tmp_path):
+    # tol > 0 stops at exactly the join path's superstep count, with or
+    # without segments: every resident task folds the same global delta
+    # at the barrier, so no segment runs past the converged superstep.
     pdf = g4_powerlaw(scale=9, num_edges=3000)
     edges = spark.createDataFrame(pdf)
     tol = 1e-6
-    a = pagerank_stream(spark, edges, tol=tol, max_iters=60, chain=1)
-    b = pagerank_stream(spark, edges, tol=tol, max_iters=60, chain=3)
-    assert a.converged and b.converged
-    assert a.supersteps <= b.supersteps <= a.supersteps + 2
-    assert b.history[-1]["delta"] < tol
-    # Both are within tol of the fixed point; successive iterates differ
-    # by < tol, so the K-1 overshoot bounds the disagreement by ~2*tol.
-    ra, rb = _ranks(a), _ranks(b)
-    assert set(ra) == set(rb)
-    ks = sorted(ra)
-    assert np.allclose([ra[k] for k in ks], [rb[k] for k in ks],
-                       rtol=0, atol=3 * tol)
+    join = pagerank(spark, edges, tol=tol, max_iters=60, mode="shuffle")
+    one = pagerank_stream(spark, edges, tol=tol, max_iters=60)
+    cp = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream",
+                           {"tol": tol, "graph": "g4s9"})
+    seg = pagerank_stream(spark, edges, tol=tol, max_iters=60,
+                          checkpointer=cp, checkpoint_every=4)
+    assert one.converged and seg.converged
+    assert one.supersteps == seg.supersteps == join.supersteps
+    assert seg.history[-1]["delta"] < tol <= seg.history[-2]["delta"]
+    assert cp.latest()["superstep"] == seg.supersteps
+    assert _ranks(one) == _ranks(seg)
 
 
-def test_pagerank_stream_chained_resume_equals_uninterrupted(spark, tmp_path):
-    # ADVICE r4: resume of a CHAINED run was untested. Fixed-iters (tol=0)
-    # so the contract is exact: checkpoint at superstep 4, resume with the
-    # same chain, identical final blobs vs the uninterrupted chained run.
+def test_pagerank_stream_segment_resume_equals_uninterrupted(spark, tmp_path):
+    # Stop at superstep 5, inside the second segment (the last save is at
+    # 3), resume from that save and finish: bit-equal to the
+    # uninterrupted run.
     pdf = g4_powerlaw(scale=9, num_edges=3000)
     edges = spark.createDataFrame(pdf)
-    config = {"algo": "pagerank_stream", "chain": 2, "graph": "g4s9"}
+    config = {"algo": "pagerank_stream", "tol": 0.0, "graph": "g4s9"}
 
-    full = pagerank_stream(spark, edges, tol=0.0, max_iters=8, chain=2)
+    full = pagerank_stream(spark, edges, tol=0.0, max_iters=8)
 
     cp1 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
     part = pagerank_stream(
-        spark, edges, tol=0.0, max_iters=4, chain=2,
-        checkpointer=cp1, checkpoint_every=4,
+        spark, edges, tol=0.0, max_iters=5,
+        checkpointer=cp1, checkpoint_every=3,
     )
-    assert part.supersteps == 4
-    assert cp1.latest() is not None and cp1.latest()["superstep"] == 4
+    assert part.supersteps == 5
+    assert cp1.latest() is not None and cp1.latest()["superstep"] == 3
 
     cp2 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
     res = pagerank_stream(
-        spark, edges, tol=0.0, max_iters=8, chain=2,
-        checkpointer=cp2, checkpoint_every=4,
+        spark, edges, tol=0.0, max_iters=8,
+        checkpointer=cp2, checkpoint_every=3,
     )
-    a, b = _ranks(full), _ranks(res)
-    assert set(a) == set(b)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks],
-                       rtol=0, atol=1e-15)
     assert res.supersteps == full.supersteps == 8
+    assert [h["superstep"] for h in res.history] == [4, 5, 6, 7, 8]
+    assert _ranks(full) == _ranks(res)
 
 
 def test_pagerank_stream_state_partitions_invariance(spark):
     # Physical blob placement must never affect results: kernels route by
-    # the row's part value, not the task index.
+    # the partition id, not the task index. p=8 blocks over S=1 (one task
+    # owns every partition), S=3 (uneven ownership) and the default
+    # (S = free slots < p).
+    from chaos_spark.csr import CsrGraph
+
     pdf = g4_powerlaw(scale=9, num_edges=3000)
     edges = spark.createDataFrame(pdf)
     a = pagerank_stream(spark, edges, tol=1e-6, max_iters=30)
@@ -187,6 +183,49 @@ def test_pagerank_stream_state_partitions_invariance(spark):
     ks = sorted(ra)
     assert np.allclose([ra[k] for k in ks], [rb[k] for k in ks],
                        rtol=0, atol=1e-15)
+    g = CsrGraph(spark, edges, num_partitions=8)
+    runs = [
+        pagerank_stream(spark, edges, tol=1e-6, max_iters=30, graph=g,
+                        state_partitions=sp)
+        for sp in (None, 1, 3)
+    ]
+    assert len({r.supersteps for r in runs}) == 1
+    assert _ranks(runs[0]) == _ranks(runs[1]) == _ranks(runs[2])
+
+
+def test_stream_barrier_wait_is_bounded(tmp_path):
+    # A peer that never publishes makes the file barrier raise, naming the
+    # superstep and the missing partitions, once the bound has passed.
+    import time
+
+    from chaos_spark.stream import _await_stats, _publish_arr
+
+    ud = str(tmp_path)
+    _publish_arr(ud, "stats-0", np.array([0.5, 1.0]))
+    t0 = time.monotonic()
+    with pytest.raises(RuntimeError, match=r"superstep 7 .*\[1, 2\]"):
+        _await_stats(ud, (0, 1, 2), 7, timeout=0.2)
+    assert 0.2 <= time.monotonic() - t0 < 5
+    _publish_arr(ud, "stats-1", np.array([0.25, 2.0]))
+    _publish_arr(ud, "stats-2", np.array([0.0, 3.0]))
+    got = _await_stats(ud, (0, 1, 2), 7, timeout=0.2)
+    assert [list(s) for s in got] == [[0.5, 1.0], [0.25, 2.0], [0.0, 3.0]]
+
+
+def test_stream_route_places_partition_on_its_owner(spark):
+    # Resident task t owns the partitions q ≡ t (mod S): the routing keys
+    # mirror Spark's hash partitioning exactly.
+    from pyspark.sql import functions as F
+
+    from chaos_spark.stream import _STATE_SCHEMA, _route
+
+    df = spark.createDataFrame([(q, None) for q in range(23)], _STATE_SCHEMA)
+    for S in (1, 3, 4, 7):
+        got = _route(df, S).select(
+            "part", F.spark_partition_id().alias("t")
+        ).collect()
+        assert sorted(r["part"] for r in got) == list(range(23))
+        assert all(r["t"] == r["part"] % S for r in got)
 
 
 def test_pagerank_stream_resume_equals_uninterrupted(spark, tmp_path):

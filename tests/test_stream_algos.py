@@ -4,20 +4,33 @@ cc_stream / lpa_stream must reach the EXACT same fixed point, in the same
 number of supersteps, as the DataFrame join paths (min-fold and integer
 mode counts are order-free — no float tolerance anywhere). Plus the
 stream-specific invariants from tests/test_stream.py: resume from a
-mid-run checkpoint equals the uninterrupted run, and physical blob
-placement (state_partitions) never affects results.
+mid-run checkpoint equals the uninterrupted run, physical blob
+placement (state_partitions) never affects results, and a barrier stage
+retried after a task failure returns bit-identical results.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
+from pyspark import cloudpickle
 
 from chaos_spark.algos.bfs import bfs, sssp
 from chaos_spark.algos.cc import connected_components
 from chaos_spark.algos.lpa import label_propagation
 from chaos_spark.checkpoint import CheckpointManager
+from chaos_spark.csr import CsrGraph
 from chaos_spark.fixtures import g1_chain, g2_star, g3_cliques, g4_powerlaw
-from chaos_spark.stream_algos import bfs_stream, cc_stream, lpa_stream, sssp_stream
+from chaos_spark.stream_algos import (
+    _HashMinCC,
+    _label_stream,
+    bfs_stream,
+    cc_stream,
+    lpa_stream,
+    sssp_stream,
+)
 
 from tests.oracles import cc_oracle, lpa_oracle
 
@@ -75,6 +88,86 @@ def test_cc_stream_state_partitions_invariance(spark):
     b = cc_stream(spark, edges, max_iters=100, state_partitions=2)
     assert _labels(a) == _labels(b)
     assert a.supersteps == b.supersteps
+    # p=8 blocks over S=1 (one task owns every partition), S=3 (uneven
+    # ownership) and the default (S = free slots < p).
+    g = CsrGraph(spark, edges, num_partitions=8, undirected=True)
+    runs = [
+        cc_stream(spark, edges, max_iters=100, graph=g, state_partitions=sp)
+        for sp in (None, 1, 3)
+    ]
+    assert {r.supersteps for r in runs} == {a.supersteps}
+    assert _labels(runs[0]) == _labels(runs[1]) == _labels(runs[2]) == _labels(a)
+
+
+class _FlakyCC(_HashMinCC):
+    """Hash-min CC that raises once: at partition 0's third apply
+    (superstep 3) of the first stage attempt. ``marks`` is a shared dir
+    counting those applies and recording that the fault fired."""
+
+    def __init__(self, marks: str):
+        self.marks = marks
+
+    def gather_apply(self, plan, upd_dir, p, q, prev):
+        fired = os.path.join(self.marks, "fired")
+        if q == 0 and not os.path.exists(fired):
+            k = len(os.listdir(self.marks)) + 1
+            open(os.path.join(self.marks, f"apply-{k}"), "w").close()
+            if k == 3:
+                open(fired, "w").close()
+                raise RuntimeError("injected fault at superstep 3")
+        return super().gather_apply(plan, upd_dir, p, q, prev)
+
+
+class _BrokenCC(_HashMinCC):
+    """Hash-min CC whose every apply raises."""
+
+    def gather_apply(self, plan, upd_dir, p, q, prev):
+        raise RuntimeError("injected fault")
+
+
+@pytest.fixture
+def by_value():
+    # The kernels above live in this test module, which executors cannot
+    # import: ship them by value.
+    mod = sys.modules[_FlakyCC.__module__]
+    cloudpickle.register_pickle_by_value(mod)
+    yield
+    cloudpickle.unregister_pickle_by_value(mod)
+
+
+def _upd_dirs(g):
+    return [d for d in os.listdir(g.block_dir) if d.startswith("upd-")]
+
+
+def test_label_stream_retried_segment_is_bit_identical(spark, tmp_path, by_value):
+    # A task failure at superstep 3 fails the barrier stage; Spark retries
+    # it as a whole, the retry publishes into a fresh attempt dir, and the
+    # result is bit-identical to an undisturbed run.
+    pdf = g4_powerlaw(scale=9, num_edges=3000)
+    edges = spark.createDataFrame(pdf)
+    g = CsrGraph(spark, edges, undirected=True)
+    clean = _label_stream(spark, edges, _HashMinCC(), 100, graph=g)
+    assert clean.supersteps > 3
+    marks = tmp_path / "marks"
+    marks.mkdir()
+    flaky = _label_stream(spark, edges, _FlakyCC(str(marks)), 100, graph=g)
+    assert (marks / "fired").exists()
+    assert _labels(flaky) == _labels(clean)
+    assert flaky.supersteps == clean.supersteps
+    assert [h["changed"] for h in flaky.history] == [
+        h["changed"] for h in clean.history
+    ]
+    assert _upd_dirs(g) == []
+
+
+def test_label_stream_failed_run_leaves_no_update_dirs(spark, by_value):
+    pdf = g4_powerlaw(scale=9, num_edges=3000)
+    edges = spark.createDataFrame(pdf)
+    g = CsrGraph(spark, edges, undirected=True)
+    with pytest.raises(Exception) as err:
+        _label_stream(spark, edges, _BrokenCC(), 100, graph=g)
+    assert "injected fault" in str(err.value)
+    assert _upd_dirs(g) == []
 
 
 def test_cc_stream_resume_equals_uninterrupted(spark, tmp_path):
